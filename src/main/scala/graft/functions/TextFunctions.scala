@@ -279,14 +279,6 @@ object TextFunctions {
   def hamming64(a: Column, b: Column): Column =
     bit_count(a.bitwiseXOR(b))
 
-  /** Engine-portable 56-bit gram hash: the first 14 hex chars of md5 as a
-    * non-negative long — exactly re-derivable by any SQL engine (the same
-    * portability contract as `Corpus.hashSplit`'s bucket). Use the
-    * codegen'd xxhash64 path instead when oracle portability is not
-    * needed. */
-  def md5Hash56(g: Column): Column =
-    conv(substring(md5(g), 1, 14), 16, 10).cast("long")
-
   /** Winnowing fingerprints (the MOSS local-fingerprinting scheme):
     * k-token gram hashes → sliding windows of `w` consecutive hashes →
     * the distinct window minima, sorted. The winnowing guarantee: any
@@ -295,40 +287,27 @@ object TextFunctions {
     * stays ~2/(w+1) — the standard substring-level near-dup/plagiarism
     * signal at a fraction of the full shingle set's size.
     *
-    * Entirely ROW-LOCAL (HOFs over the doc's own token array — nothing
-    * shuffles until the caller groups fingerprints), so it scales with
-    * corpus tokens at any cluster size. Short docs follow the shingle
+    * One codegen'd [[graft.expressions.WinnowFingerprints]] over the
+    * whitespace token array: each gram is hashed from its UTF-8 bytes in a
+    * reused buffer, with no gram strings and no per-window slices — one
+    * O(tokens × (k + w)) loop per row, ROW-LOCAL (nothing shuffles until
+    * the caller groups fingerprints). Short docs follow the shingle
     * family's convention (fewer than k tokens → the whole token sequence
     * as one gram; fewer grams than w → one window over all grams). NULL
     * text yields NULL.
     *
-    * `gramHash` defaults to the portable [[md5Hash56]] so the whole scheme
-    * is exactly re-derivable in SQL; pass an xxhash64-based hash for the
-    * faster non-oracle path. */
+    * `gramHash` defaults to the portable
+    * [[graft.expressions.WinnowFingerprints.Md5Hash56]] (the first 14 hex
+    * digits of the gram's md5) so the whole scheme is exactly re-derivable
+    * in SQL; [[graft.expressions.WinnowFingerprints.Xxhash64]] is the
+    * cheaper non-oracle hash. */
   def winnowFingerprints(
       text: Column,
       k: Int = 3,
       w: Int = 4,
-      gramHash: Column => Column = md5Hash56): Column = {
-    require(k >= 1, "k must be at least 1")
-    require(w >= 1, "w must be at least 1")
-    // both intermediate arrays are [[bindOnce]]-bound: with the token array
-    // and the gram-hash array inlined instead, every window's lambda
-    // re-evaluated the full tokenize+hash subtree — n windows × n gram
-    // hashes = O(n²) md5s per document, which pinned one core for minutes
-    // per sf0.1 partition on the operator's first scale audit
-    bindOnce(tokens(text)) { ts =>
-      val n = size(ts)
-      val grams = when(n < k, array(array_join(ts, " ")))
-        .otherwise(transform(sequence(lit(0), n - lit(k)),
-          i => array_join(slice(ts, i + lit(1), lit(k)), " ")))
-      bindOnce(transform(grams, g => gramHash(g))) { hs =>
-        val nh = size(hs)
-        val mins = when(nh < w, array(array_min(hs)))
-          .otherwise(transform(sequence(lit(0), nh - lit(w)),
-            i => array_min(slice(hs, i + lit(1), lit(w)))))
-        array_sort(array_distinct(mins))
-      }
-    }
-  }
+      gramHash: graft.expressions.WinnowFingerprints.GramHash =
+        graft.expressions.WinnowFingerprints.Md5Hash56): Column =
+    org.apache.spark.sql.graftbridge.toColumn(
+      graft.expressions.WinnowFingerprints(
+        org.apache.spark.sql.graftbridge.toExpression(tokens(text)), k, w, gramHash))
 }

@@ -100,13 +100,17 @@ object Assembly {
         .select(col("id"), col("contaminated")))
     val kept3 = kept2.join(dec.filter(!col("contaminated")).select("id"), Seq("id"), "left_semi")
 
-    // 4/5. per-source quality cap over the decontaminated survivors
+    // 4/5. per-source quality cap over the decontaminated survivors; the
+    // capped table IS the survivor set (ids are unique), so it feeds the
+    // split directly. A semi join of `scored` against its own checkpointed
+    // cap shares the `id` attribute on both sides, which the analyzer
+    // cannot re-alias with AQE off ("conflicting references in Join").
     val scored = kept3.withColumn("quality", TextFunctions.qualityScore(col("text")))
-    val ranked = Dedup.truncate(Corpus.capPerGroup(scored, "source", "quality", "id", capPerSource))
-    val kept4 = scored.join(ranked.select("id"), Seq("id"), "left_semi")
+    val ranked = Dedup.truncate(
+      Corpus.capPerGroup(scored, "source", "quality", "id", capPerSource).select("id", "lang"))
 
     // 4/6. deterministic split + shard packing of the final survivors
-    val splits = Corpus.hashSplit(kept4, "id", salt, trainPct, valPct)
+    val splits = Corpus.hashSplit(ranked, "id", salt, trainPct, valPct)
       .select(col("id"), col("lang"), col("split"))
     val wPack = Window.partitionBy("split", "lang").orderBy("id")
     val packed = splits.join(gate.select(col("id"), col("n_tokens")), Seq("id"))

@@ -263,7 +263,13 @@ object Dedup {
     * blocks freed, keeping storage O(1) in rounds. Fail-loud like
     * [[connectedComponents]]: throws if the round budget is exhausted before
     * the fixpoint — silently returning partially-refined labels would hand
-    * callers unconverged cluster ids with no signal. */
+    * callers unconverged cluster ids with no signal.
+    *
+    * The result is a projection over the final round's checkpoint, not the
+    * checkpoint itself: a caller owning the whole result reclaims that
+    * round's checkpoint with `graftbridge.freeCheckpoints` (deep);
+    * `freeCheckpoint` frees only a frame whose root IS a checkpoint, so on
+    * this result it does nothing. */
   def refineToFixpoint(assignments: DataFrame, idCol: String, maxRounds: Int = 10): DataFrame = {
     var cur = truncate(assignments)
     // the round that is checkpointed but not yet promoted to `cur`: between
@@ -320,7 +326,12 @@ object Dedup {
     * shared non-minimum document merge correctly. Rounds are checkpointed
     * (see [[truncate]]) with the previous round's blocks freed; throws
     * instead of silently returning partial labels if `maxRounds` is hit
-    * before the fixpoint. */
+    * before the fixpoint.
+    *
+    * The result is a projection over the final round's checkpoint (the
+    * edge checkpoint is already freed): a caller owning the whole result
+    * reclaims it with `graftbridge.freeCheckpoints` (deep);
+    * `freeCheckpoint` is root-only and does nothing on this result. */
   def connectedComponents(
       pairs: DataFrame, srcCol: String, dstCol: String, maxRounds: Int = 20): DataFrame = {
     val edges = truncate(
@@ -1051,24 +1062,6 @@ object Dedup {
         lit(bits).as("nbits"), lit(t).as("n_probes"))
   }
 
-  /** Winnowing-based near-dup candidate pairs: documents sharing at least
-    * one winnow fingerprint ([[graft.functions.TextFunctions
-    * .winnowFingerprints]]) are candidates — the substring-level
-    * complement to the set-level MinHash banding: the winnowing guarantee
-    * makes any shared token run of ≥ w+k−1 tokens produce a shared
-    * fingerprint, so long verbatim overlaps cannot be missed, at
-    * ~2/(w+1) of the full shingle index's size.
-    *
-    * Scale shape is the inverted shingle index's: Σfreq² over fingerprint
-    * keys, never corpus², with the same document-frequency cap dial —
-    * `maxFpDf` drops boilerplate fingerprints shared by too many docs,
-    * bounding per-key join work at cap² (the 100 TB web-corpus defense).
-    * Fingerprints are 8-byte keys; ids-only rows go through the join.
-    * `gramHash` defaults to codegen'd xxhash64 (fast path); pass
-    * [[graft.functions.TextFunctions.md5Hash56]] when engine-portable
-    * fingerprints are needed.
-    *
-    * Returns candidate pairs (id_a < id_b), each pair once. */
   /** Production default for the winnow fingerprint df cap: a FINITE cap
     * by default, because the unsafe behavior (one boilerplate fingerprint
     * shared by f docs → f²/2 join rows) is exactly what a user taking
@@ -1086,6 +1079,28 @@ object Dedup {
     * unconditional guarantee. */
   val DefaultMaxFpDf: Long = 1000L
 
+  /** Winnowing-based near-dup candidate pairs: documents sharing at least
+    * one winnow fingerprint ([[graft.functions.TextFunctions
+    * .winnowFingerprints]]) are candidates — the substring-level
+    * complement to the set-level MinHash banding: the winnowing guarantee
+    * makes any shared token run of ≥ w+k−1 tokens produce a shared
+    * fingerprint, so long verbatim overlaps cannot be missed, at
+    * ~2/(w+1) of the full shingle index's size.
+    *
+    * One text pass: the codegen'd fingerprint kernel runs once per doc,
+    * and each fingerprint's document frequency is a `count(*)` window over
+    * its fp partition — the same exchange then feeds both sides of the
+    * fp self-join, so the explode is never re-derived for a separate
+    * df reduce. Scale shape is the inverted shingle index's: Σfreq² over
+    * fingerprint keys, never corpus², with the same document-frequency
+    * cap dial — `maxFpDf` drops boilerplate fingerprints shared by too
+    * many docs, bounding per-key join work at cap² (the 100 TB web-corpus
+    * defense). Fingerprints are 8-byte keys; ids-only rows go through the
+    * join. `gramHash` defaults to xxhash64 (the cheaper hash); pass
+    * [[graft.expressions.WinnowFingerprints.Md5Hash56]] when
+    * engine-portable fingerprints are needed.
+    *
+    * Returns candidate pairs (id_a < id_b), each pair once. */
   def winnowPairs(
       df: DataFrame,
       idCol: String,
@@ -1093,16 +1108,16 @@ object Dedup {
       k: Int = 3,
       w: Int = 4,
       maxFpDf: Long = DefaultMaxFpDf,
-      gramHash: Column => Column = xxhash64(_)): DataFrame = {
+      gramHash: graft.expressions.WinnowFingerprints.GramHash =
+        graft.expressions.WinnowFingerprints.Xxhash64): DataFrame = {
     require(maxFpDf >= 1, "maxFpDf must be at least 1")
-    val fps = df.select(col(idCol).as("id"),
-      explode(graft.functions.TextFunctions.winnowFingerprints(
-        col(textCol), k, w, gramHash)).as("fp"))
     // fingerprints are distinct per doc, so the per-fp count IS document
-    // frequency; the cap filter is one small reduce reused by the join
-    val kept = fps.join(
-      fps.groupBy("fp").agg(count(lit(1)).as("__df")).filter(col("__df") <= maxFpDf),
-      Seq("fp"))
+    // frequency
+    val kept = df.select(col(idCol).as("id"),
+        explode(graft.functions.TextFunctions.winnowFingerprints(
+          col(textCol), k, w, gramHash)).as("fp"))
+      .withColumn("__df", count(lit(1)).over(Window.partitionBy("fp")))
+      .filter(col("__df") <= maxFpDf)
     kept.select(col("fp"), col("id").as("id_a"))
       .join(kept.select(col("fp"), col("id").as("id_b")), Seq("fp"))
       .filter(col("id_a") < col("id_b"))

@@ -813,6 +813,27 @@ class PipelineOpsSpec extends AnyFunSuite {
     assert(out.distinct().df eq out.df)
   }
 
+  test("assembleCorpus audit is the same with AQE off as with AQE on") {
+    import graft.operators.Assembly
+    // an ISOLATED session (own SQLConf, shared context) so the flip cannot
+    // race concurrently-running suites on the shared session
+    val aqeOff = spark.newSession()
+    aqeOff.conf.set("spark.sql.adaptive.enabled", "false")
+    def audit(s: org.apache.spark.sql.SparkSession): Seq[String] = {
+      val docs = graft.sources.Tables.load(s, "/root/testdata/sf0.01", "documents")
+      Assembly.assembleCorpus(
+          docs.filter(col("doc_id") % 97 =!= 0), docs.filter(col("doc_id") % 97 === 0),
+          "doc_id", "text", "source", "lang",
+          minTokens = 20L, maxTokens = 100000L,
+          maxTopNgramFrac = 0.10, maxDupNgramFrac = 0.15, maxAvgNll = 3.45,
+          capPerSource = 5, shardTokens = 200L)
+        .orderBy("id").collect().map(_.toString).toSeq
+    }
+    val on = audit(spark)
+    assert(on.nonEmpty)
+    assert(audit(aqeOff) == on)
+  }
+
   test("PipelineSyntax: provenance lineage + pk on metadata-aware extensions") {
     import graft.operators.PipelineSyntax._
     val mf = MetaFrame(docs, Map("corpus" -> "unit"))

@@ -279,6 +279,33 @@ class PlanQualitySpec extends AnyFunSuite {
         s"$name must bind its token array once, found ${splitNodes(e)} StringSplit nodes")
   }
 
+  test("winnowPairs: one fingerprint pass, no join to its own aggregate, codegen'd kernel") {
+    import graft.operators.Dedup
+    import org.apache.spark.sql.execution.{GenerateExec, InputAdapter, SparkPlan, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    val q = Dedup.winnowPairs(Tables.load(spark, sfDir, "documents"), "doc_id", "text")
+    q.collect() // AQE finalizes stage reuse
+    val plan = q.queryExecution.executedPlan
+    // descends into AQE query stages; a reused stage is a leaf, so a
+    // fingerprint explode re-derived for a second consumer counts twice
+    val aqe = new AdaptiveSparkPlanHelper {}
+    val generates = aqe.collect(plan) { case g: GenerateExec => g }
+    assert(generates.size == 1, s"the text must be read and fingerprinted once:\n$plan")
+    val joins = aqe.collect(plan) { case j: BaseJoinExec => j }
+    assert(joins.nonEmpty && joins.forall(j => aqe.collect(j) { case a: BaseAggregateExec => a }.isEmpty),
+      s"document frequency must not be a separate aggregate joined back:\n$plan")
+    // the kernel must sit inside a whole-stage-codegen stage: a fall-back
+    // to interpreted evaluation drops its operator out of the stage
+    def stage(p: SparkPlan): Seq[SparkPlan] =
+      p +: (p match { case _: InputAdapter => Nil; case _ => p.children.flatMap(stage) })
+    val codegened = aqe.collect(plan) { case w: WholeStageCodegenExec => stage(w.child) }.flatten
+    assert(codegened.exists(_.expressions.exists(
+        _.exists(_.isInstanceOf[graft.expressions.WinnowFingerprints]))),
+      s"WinnowFingerprints must be evaluated inside WholeStageCodegen:\n$plan")
+  }
+
   test("IVF cell assignment is row-local: no Window node, no corpus×k fan-out") {
     import graft.operators.Similarity
     val emb = Tables.load(spark, sfDir, "embeddings")
